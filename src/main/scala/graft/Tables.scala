@@ -15,8 +15,17 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** One table, read with the schema from its parquet footer
+    * ([[org.apache.spark.sql.graft.FooterSchema]], under the session
+    * conf): a schema-less `spark.read.parquet` launches a
+    * schema-inference job on every call, which every query pays once
+    * per table it reads. A directory of part files falls back to
+    * Spark's own inference. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    org.apache.spark.sql.graft.FooterSchema.of(spark, path)
+      .fold(spark.read)(spark.read.schema).parquet(path)
+  }
 
   /** `events.ts` normalization. Two generator layouts exist:
     *

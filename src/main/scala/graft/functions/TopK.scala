@@ -2,36 +2,32 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.BoundedTopK
 
-/** Bounded-state top-k-per-group as a typed MERGEABLE aggregate: a
-  * k-bounded buffer per partial, so the exchange carries at most `k`
-  * rows per group per partition and the reducer merges buffers — on a
-  * naive full-window plan that is moving the answer instead of the
-  * table (TopKSpec measures 1400× fewer exchange bytes at 200k rows).
+/** Exact top-k per group as ONE hash aggregate
+  * ([[org.apache.spark.sql.graft.BoundedTopK]]): each group's state is
+  * `k` fixed-width slots, so the plan is a partial + final
+  * `HashAggregate` whose exchange carries at most `k` rows per group
+  * per partition, with no sort anywhere.
   *
-  * Honest positioning vs the `row_number() OVER (...) <= k` idiom:
-  * Spark 4's own `InferWindowGroupLimit` rule already bounds THAT
-  * plan's exchange with a map-side WindowGroupLimitExec whenever the
-  * rank filter sits directly on the window (TopKSpec measures both
-  * bounded forms within 2× of each other — the naive 1000× gap only
-  * applies when the rewrite can't fire). What the aggregate form
-  * adds over the optimizer rewrite:
-  *  - it is a real AGGREGATE, so it composes with sibling aggregates
-  *    (count/sum/sketches) in ONE aggregation pass — the window form
-  *    needs its own shuffle+sort next to any per-group aggregation;
-  *  - it runs under Structured Streaming update mode as per-group
-  *    state (window functions do not run on streams);
-  *  - the bound is structural, not dependent on the optimizer
-  *    recognizing an adjacent filter (a rank consumed by later
-  *    computation, or a threshold fixed at plan build, still gets
-  *    bounded state).
+  * Against the `row_number() OVER (...) <= k` idiom: Spark 4's
+  * `InferWindowGroupLimit` bounds that plan's exchange with a map-side
+  * `WindowGroupLimit` when the rank filter sits on the window, but the
+  * window still SORTS every input row by (group, order) on both sides
+  * of the exchange — on q219's 1.9M exploded pairs that sort was most
+  * of the stage's task time. TopKSpec measures the two forms' exchange
+  * bytes and checks the aggregate is sort-free. The aggregate form
+  * also composes with sibling aggregates in one aggregation pass, and
+  * its bound does not depend on the optimizer recognizing an adjacent
+  * filter. Window functions do not run on streams at all; the
+  * streaming form ([[graft.streaming.Features.runningTopK]]) keeps the
+  * same order in a [[TopKBuf]] per group in the state store.
+  *
   * Same mergeable-summary contract as the sketch family
   * ([[Freq]]/[[Quant]]/[[Theta]]), but EXACT at any size: top-k under
-  * a total order is computable from per-partial top-k's, no
-  * approximation regime.
+  * a total order is computable from per-partial top-k's.
   *
   * Determinism: the order is the (ord, id) pair — ties on `ord` break
   * to the smaller id, and `id` is expected unique per group (the
@@ -40,17 +36,17 @@ import org.apache.spark.sql.functions._
   * oracle-comparable bit-for-bit. */
 object TopK {
 
-  /** Bounded buffer: the best `k` (key, id) pairs in ascending
-    * lexicographic order, where callers pre-map "best" onto SMALLEST
-    * key. Insert is O(log k); the worst element is evicted on
-    * overflow.
+  /** Bounded JVM-side buffer, the state of the streaming top-k
+    * ([[graft.streaming.Features.runningTopK]]): the best `k`
+    * (key, id) pairs in ascending lexicographic order, where callers
+    * pre-map "best" onto SMALLEST key. Insert is O(log k); the worst
+    * element is evicted on overflow.
     *
     * Serialization is hand-rolled as `k` + 2 longs per entry (the
-    * [[Theta.ThetaBuf]] treatment): partial buffers cross the
-    * exchange once per group per partition, and default Java
-    * serialization of a TreeSet of boxed tuples is ~1.5 KB for k=3 —
-    * 15× the payload — which TopKSpec's measured-shuffle test showed
-    * erasing the operator's whole advantage at small scale. */
+    * [[Theta.ThetaBuf]] treatment): the state store writes the buffer
+    * once per group per micro-batch, and default Java serialization
+    * of a TreeSet of boxed tuples is ~1.5 KB for k=3 — 15× the
+    * payload. */
   final class TopKBuf(private var k0: Int) extends Serializable {
     require(k0 >= 1, s"k must be >= 1, got $k0")
     def k: Int = k0
@@ -77,43 +73,30 @@ object TopK {
     }
   }
 
-  private class TopKAgg(k: Int, largest: Boolean)
-      extends Aggregator[(Long, Long), TopKBuf, Seq[(Long, Long)]] {
-    // "best first" = ascending (key, id) with key = ord negated in
-    // largest mode (ord = Long.MinValue is unrepresentable negated;
-    // real order keys — counts, cents, chars — never touch it)
-    private def key(ord: Long): Long = if (largest) -ord else ord
-    def zero: TopKBuf = new TopKBuf(k)
-    def reduce(b: TopKBuf, a: (Long, Long)): TopKBuf = {
-      b.insert((key(a._1), a._2)); b
-    }
-    def merge(a: TopKBuf, b: TopKBuf): TopKBuf = { a.mergeIn(b); a }
-    def finish(b: TopKBuf): Seq[(Long, Long)] =
-      b.set.toSeq.map { case (kk, id) => (id, if (largest) -kk else kk) }
-    def bufferEncoder: org.apache.spark.sql.Encoder[TopKBuf] =
-      Encoders.javaSerialization[TopKBuf]
-    def outputEncoder: org.apache.spark.sql.Encoder[Seq[(Long, Long)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  }
-
   /** Top `k` rows per group by `ord` (long; `largest=false` for
     * bottom-k, which with a hash-priority `ord` is a deterministic
     * per-group reservoir sample). Output: (group columns..., `rnk`
-    * 1-based, `id`, `ord`), unordered across groups. Null ord/id rows
-    * are dropped (TRY_CAST, the [[Freq]] treatment). */
+    * 1-based, `id`, `ord`, payload columns...), unordered across
+    * groups; each payload column keeps its name and type and comes
+    * from the same input row as its `id`. Null ord/id rows are
+    * dropped (TRY_CAST, the [[Freq]] treatment). Payload columns must
+    * be fixed-width (numeric, boolean, date, timestamp). */
   def perGroup(df: DataFrame, group: Seq[Column], ord: Column,
-               id: Column, k: Int, largest: Boolean = true): DataFrame = {
-    val ol = ord.try_cast("long")
-    val il = id.try_cast("long")
-    val agged = df.filter(ol.isNotNull && il.isNotNull)
-      .groupBy(group: _*)
-      .agg(udaf(new TopKAgg(k, largest),
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))(ol, il)
-        .as("__top"))
+               id: Column, k: Int, largest: Boolean = true,
+               payload: Seq[String] = Nil): DataFrame = {
+    payload.foreach { p =>
+      val t = df.schema(p).dataType
+      require(BoundedTopK.payloadTypeOk(t),
+        s"TopK.perGroup: payload column $p has type $t, not fixed-width")
+    }
+    val agged = df.groupBy(group: _*)
+      .agg(BoundedTopK(ord.try_cast("long"), id.try_cast("long"),
+        payload.map(df.col), k, largest).as("__top"))
     val groupNames = agged.columns.dropRight(1).toSeq.map(col)
     agged
       .select(groupNames :+ posexplode(col("__top")).as(Seq("__p", "__r")): _*)
-      .select(groupNames :+ (col("__p") + 1).cast("long").as("rnk")
-        :+ col("__r._1").as("id") :+ col("__r._2").as("ord"): _*)
+      .select(groupNames ++ ((col("__p") + 1).cast("long").as("rnk")
+        +: col("__r.id").as("id") +: col("__r.ord").as("ord")
+        +: payload.indices.map(j => col(s"__r.p$j").as(payload(j)))): _*)
   }
 }

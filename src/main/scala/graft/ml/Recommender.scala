@@ -5,6 +5,8 @@ import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PartitionedCheckpoint
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Collaborative-filtering recommender (the reference's
   * recommendation-signal surface, `ingestion/producer/producer.py:84-104`
@@ -130,40 +132,54 @@ object Recommender {
       .agg(count(lit(1)).as("n_baskets"))
 
   /** The fused co-occurrence scaffold every graph/pair query should
-    * ride: distinct (basket, item) projection materialized EXACTLY
-    * once (eager spill-safe localCheckpoint, pinned for end-of-query
-    * release), histogram-derived cost cap computed FROM that pinned
-    * frame (the old two-call shape — `coOccurrence(li, maxBasket =
-    * maxBasketFromHistogram(li, ...))` — re-ran the scan + distinct
-    * shuffle once for the probe and once for the pipeline), and the
-    * breadth-cap window filter elided when the cap provably keeps
-    * every basket (cap >= maxObs — the q219 no-op-filter elision,
-    * hoisted here so all ~10 call sites get it). Value-identical to
-    * the two-call shape at every scale: same distinct, same histogram,
-    * same threshold semantics when the cap binds. */
+    * ride: the distinct (basket, item) projection materialized EXACTLY
+    * once as a basket-keyed pin (pinned for end-of-query release), the
+    * cost cap derived from the rows-per-basket histogram that the
+    * pin's own materializing job returns (no probe job over the pin;
+    * see [[org.apache.spark.sql.graft.PartitionedCheckpoint.byKeyCensus]]),
+    * and the breadth-cap window filter elided when the cap provably
+    * keeps every basket (cap >= maxObs — the q219 no-op-filter
+    * elision, hoisted here so all ~10 call sites get it).
+    * Value-identical to the two-call shape `coOccurrence(li, maxBasket
+    * = maxBasketFromHistogram(li, ...))` at every scale: same
+    * distinct, same histogram, same threshold semantics when the cap
+    * binds. The histogram has one entry per distinct basket SIZE, so
+    * what the job returns to the driver stays a few hundred rows at
+    * any scale. */
   def boundedItems(baskets: DataFrame, basketCol: String,
                    itemCol: String,
                    pairBudget: Long = 100000000L): DataFrame = {
-    // checkpoint WITH declared basket-key partitioning + order
-    // (round-12 phase 2): the cap histogram (groupBy b), the breadth
-    // window (partitionBy b) and BOTH sides of the pair self-join
-    // (join on b) then plan with no exchange and no re-sort — one
-    // extra keyed exchange at build time buys zero afterwards
-    // (plain localCheckpoint loses the partitioning under AQE;
-    // see PartitionedCheckpoint's scaladoc). The distinct is FUSED
-    // into that keyed exchange (round-12 phase 3): b-partitioning
-    // colocates every copy of a (b, i) row, so the dedup runs
-    // partition-local with no exchange of its own — one shuffle
-    // total where distinct-then-byKey paid two.
-    val items = graft.functions.Checkpoints.pin(
-      org.apache.spark.sql.graft.PartitionedCheckpoint.byKeyWith(
-        baskets.select(col(basketCol).as("b"), col(itemCol).as("i")),
-        Seq("b"))(_.dropDuplicates()))
-    val (cap, maxObs) = capFromDistinct(items, "b", pairBudget)
+    // checkpoint WITH declared basket-key partitioning + order: the
+    // breadth window (partitionBy b) and BOTH sides of the pair
+    // self-join (join on b) then plan with no exchange and no
+    // re-sort (plain localCheckpoint loses the partitioning under
+    // AQE; see PartitionedCheckpoint's scaladoc). The distinct is
+    // FUSED into that keyed exchange: b-partitioning colocates every
+    // copy of a (b, i) row, so the dedup runs partition-local.
+    val (items, census) = basketPin(
+      baskets.select(col(basketCol).as("b"), col(itemCol).as("i")), "b")
+    capToBudget(items, "b", census, pairBudget)
+  }
+
+  /** The distinct (key, item) pin keyed on `key`, and its census. */
+  def basketPin(pairs: DataFrame, key: String)
+      : (DataFrame, PartitionedCheckpoint.KeyCensus) = {
+    val (items, census) = PartitionedCheckpoint.byKeyCensus(
+      pairs, Seq(key))(_.dropDuplicates())
+    (graft.functions.Checkpoints.pin(items), census)
+  }
+
+  /** `items` with every `key` whose row count exceeds the budget cap
+    * ([[capFromSizes]] over `census`) dropped — `items` itself when
+    * the cap keeps every key. */
+  def capToBudget(items: DataFrame, key: String,
+                  census: PartitionedCheckpoint.KeyCensus,
+                  pairBudget: Long = 100000000L): DataFrame = {
+    val (cap, maxObs) = capFromSizes(census.sizes, pairBudget)
     if (cap >= maxObs) items
     else items
       .withColumn("__n", count(lit(1)).over(
-        Window.partitionBy(col("b"))))
+        Window.partitionBy(col(key))))
       .filter(col("__n") <= cap)
       .drop("__n")
   }
@@ -214,14 +230,24 @@ object Recommender {
     * distinct per (basket, item) — e.g. a checkpointed projection the
     * caller also feeds the pair pipeline. Skips the redundant
     * distinct exchange the raw-baskets entry point must pay (an
-    * optimizer can't see through a checkpoint to prove distinctness). */
+    * optimizer can't see through a checkpoint to prove distinctness).
+    * The histogram (one row per distinct basket size) is sorted on
+    * the driver: an `orderBy` would cost a range-partition sampling
+    * job plus a shuffle for a few hundred rows. A basket-keyed pin
+    * already carries this histogram — [[boundedItems]] reads it from
+    * the pin's census instead of calling this. */
   def capFromDistinct(items: DataFrame, basketCol: String,
-                      pairBudget: Long = 100000000L): (Int, Long) = {
-    val hist = items
+                      pairBudget: Long = 100000000L): (Int, Long) =
+    capFromSizes(items
       .groupBy(col(basketCol)).agg(count(lit(1)).as("n"))
       .groupBy(col("n")).agg(count(lit(1)).as("cnt"))
-      .orderBy(col("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      .toIndexedSeq, pairBudget)
+
+  /** The cap walk over a basket-size histogram of (size, baskets)
+    * rows in ascending size order: (cap, largest observed size). */
+  def capFromSizes(hist: Seq[(Long, Long)],
+                   pairBudget: Long = 100000000L): (Int, Long) = {
     // The cap is a THRESHOLD (every n <= cap is kept), so stop at the
     // first size that busts the budget — a later size that would fit
     // on its own cannot be admitted without readmitting this one.
@@ -245,13 +271,25 @@ object Recommender {
     (math.min(cap, Int.MaxValue).toInt, maxObs)
   }
 
-  /** Top-k co-items per item with deterministic tie-break. Output is
-    * `(item, co_item, n_baskets, rnk)` — `rnk` (1-based rank within
-    * the item) is part of the contract, not a leaked scratch
-    * column. */
+  /** Top-k co-items per item with deterministic tie-break
+    * (n_baskets desc, co_item). Output is `(item, co_item, n_baskets,
+    * rnk)` — `rnk` (1-based int rank within the item) is part of the
+    * contract, not a leaked scratch column. Integral item ids take
+    * the sort-free bounded aggregate ([[graft.functions.TopK]]); any
+    * other id type (string SKUs) ranks through the equivalent
+    * row_number window. */
   def topCoItems(co: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("item"))
-      .orderBy(col("n_baskets").desc, col("co_item"))
-    co.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+    val idType = co.schema("co_item").dataType
+    idType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        graft.functions.TopK.perGroup(co, Seq(col("item")),
+            col("n_baskets"), col("co_item"), k)
+          .select(col("item"), col("id").cast(idType).as("co_item"),
+            col("ord").as("n_baskets"), col("rnk").cast("int").as("rnk"))
+      case _ =>
+        val w = Window.partitionBy(col("item"))
+          .orderBy(col("n_baskets").desc, col("co_item"))
+        co.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+    }
   }
 }

@@ -4669,30 +4669,36 @@ object CoreQueries {
     // Pinned checkpoints on the reused frames: items feeds three join
     // sides (x, y, z) and pairs feeds both the F2 census and the
     // semi-join — an unpinned plan replays the scan + distinct (and
-    // the pair self-join) once per consumer.
-    val items = graft.functions.Checkpoints.pin(Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("b"), col("l_partkey").as("i"))
-      .distinct().localCheckpoint())
+    // the pair self-join) once per consumer. items is basket-keyed
+    // (the q223 pin), so the pair self-join and the triple join read
+    // it partition-local on the session's shuffle width; a plain
+    // distinct().localCheckpoint() kept AQE's coalesced single
+    // partition and ran every later stage on one task.
+    val (items, _) = graft.ml.Recommender.basketPin(Tables.lineitem(s, d)
+      .select(col("l_orderkey").as("b"), col("l_partkey").as("i")), "b")
     val pairs = graft.functions.Checkpoints.pin(
       items.as("x").join(items.as("y"),
           col("x.b") === col("y.b") && col("x.i") < col("y.i"))
         .select(col("x.b").as("b"), col("x.i").as("pa"),
           col("y.i").as("pb"))
         .localCheckpoint())
-    val f2 = pairs.groupBy(col("pa"), col("pb"))
+    // ONE broadcast F2 (pa, pb) serves all three semi-joins: each
+    // probe renames its two columns onto (pa, pb), so the three
+    // broadcast exchanges are the same plan and reuse one build
+    val f2 = broadcast(pairs.groupBy(col("pa"), col("pb"))
       .agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 2)
-      .select(col("pa"), col("pb"))
-    val pruned = pairs.join(broadcast(f2), Seq("pa", "pb"), "left_semi")
+      .select(col("pa"), col("pb")))
+    def inF2(df: DataFrame, x: String, y: String): DataFrame =
+      df.withColumnsRenamed(Map(x -> "pa", y -> "pb"))
+        .join(f2, Seq("pa", "pb"), "left_semi")
+        .withColumnsRenamed(Map("pa" -> x, "pb" -> y))
+    val pruned = pairs.join(f2, Seq("pa", "pb"), "left_semi")
       .withColumnRenamed("b", "pbk")
-    val tri = pruned.join(items.as("z"),
+    val tri = inF2(inF2(pruned.join(items.as("z"),
         col("pbk") === col("z.b") && col("pb") < col("z.i"))
       .select(col("pa").as("a"), col("pb").as("c"),
-        col("z.i").as("e"))
-      .join(broadcast(f2.select(col("pa").as("c"), col("pb").as("e"))),
-        Seq("c", "e"), "left_semi")
-      .join(broadcast(f2.select(col("pa").as("a"), col("pb").as("e"))),
-        Seq("a", "e"), "left_semi")
+        col("z.i").as("e")), "c", "e"), "a", "e")
     tri.groupBy(col("a"), col("c"), col("e"))
       .agg(count(lit(1)).as("support"))
       .filter(col("support") >= 2)

@@ -409,8 +409,9 @@ object RecommenderQueries {
     * oracle below — the q264 treatment: equality at the gate proves
     * the cap dropped nothing, while at 100 TB the same call bounds
     * the join to the budget. Pair census and audience census are
-    * map-side-combinable keyed aggs; the per-item top-3 window is
-    * partitioned by item over its neighbor list. */
+    * map-side-combinable keyed aggs; the per-item top-3 is a bounded
+    * hash aggregate keyed by item ([[graft.functions.TopK]]: ≤ 3
+    * fixed-width slots per item, no sort). */
   val q219 = QueryDef(
     "q219_item_cf",
     """WITH up AS (
@@ -441,38 +442,18 @@ object RecommenderQueries {
       .join(Tables.orders(s, d),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("u"), col("l_partkey").as("i"))
-    // Materialize the distinct projection BEFORE the histogram probe:
-    // the cap derivation and the pair pipeline both consume it, and
-    // without it each re-runs the lineitem⋈orders join + distinct from
-    // scratch (measured ~2× the whole query at sf0.1). Eager
-    // localCheckpoint, NOT cache(): the default-level cache was the
-    // heap-pressure epicenter of three rounds of q219 bench variance —
-    // under memory pressure its blocks evict and the join+distinct
-    // recomputes mid-query, doubling the wall time; checkpoint blocks
-    // are MEMORY_AND_DISK, so pressure spills them instead.
-    // distinct FUSED into the u-keyed exchange (round-12 phase 3):
-    // u-partitioning colocates every copy of a (u, i) row, so the
-    // dedup is partition-local — one shuffle where distinct-then-
-    // byKey paid two full passes over the joined projection.
-    val up0 = graft.functions.Checkpoints.pin(
-      org.apache.spark.sql.graft.PartitionedCheckpoint.byKeyWith(
-        raw, Seq("u"))(_.dropDuplicates()))
-    // Breadth cap from the size histogram (see scaladoc): at test SFs
-    // the budget admits the whole histogram, so nothing is dropped and
-    // the uncapped oracle proves it; at scale this bounds the pair join.
-    // When the cap admits the max observed breadth the filter is a
-    // provable no-op — elide it (it costs a per-key count pass worth
-    // ~2x the pair stage); when the histogram busts the budget
-    // (cap < maxObs, the 100-TB case) the same code path binds.
-    // capFromDistinct, not capAndMaxObserved: up0 IS the distinct
-    // projection (checkpointed — the optimizer can't see through the
-    // checkpoint to elide a redundant re-distinct in the probe)
-    val (cap, maxObs) = Recommender.capFromDistinct(up0, "u")
-    val up = if (cap >= maxObs) up0 else up0
-      .withColumn("__n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("u"))))
-      .filter(col("__n") <= cap)
-      .drop("__n")
+    // One distinct (u, i) pin feeds both the cap and the pair
+    // pipeline (without it each re-runs the lineitem⋈orders join +
+    // distinct, ~2× the whole query at sf0.1). A checkpoint, not
+    // cache(): checkpoint blocks are MEMORY_AND_DISK and spill under
+    // heap pressure, where evicted cache blocks recomputed the
+    // join+distinct mid-query. The distinct is fused into the u-keyed
+    // exchange, so it runs partition-local. The breadth cap comes
+    // from the per-customer size histogram the pin's own job returns
+    // (see scaladoc): when it admits the largest breadth the filter
+    // is a provable no-op and is elided; at scale it binds.
+    val (up0, census) = Recommender.basketPin(raw, "u")
+    val up = Recommender.capToBudget(up0, "u", census)
     val ni = up.groupBy(col("i")).agg(count(lit(1)).as("n"))
     val pp = up.as("a").join(up.as("b"),
         col("a.u") === col("b.u") && col("a.i") < col("b.i"))
@@ -481,13 +462,13 @@ object RecommenderQueries {
     // both orientations in ONE pass over the pair census (explode of
     // a 2-struct array) — the unionByName(swap) form evaluated the
     // 13M-row post-shuffle aggregation twice, once per branch, with
-    // only the exchange reused (round-12; same rows, oracle unchanged).
+    // only the exchange reused (same rows, oracle unchanged).
     // Audience joins run on the HALF-SIZED x<y census and the explode
-    // symmetrizes AFTERWARDS (round-12 phase 2): the two ni joins each
-    // exchange |pp| rows instead of 2·|pp|, and the only operator that
-    // ever sees the doubled frame is the per-item top-3 window, whose
-    // exchange is pre-shrunk by the partial WindowGroupLimit (≤ 3 rows
-    // per item per partition). Same rows by construction.
+    // symmetrizes AFTERWARDS: the two ni joins each exchange |pp| rows
+    // instead of 2·|pp|, and the only operator that ever sees the
+    // doubled frame is the per-item top-3, a hash aggregate whose
+    // partial phase keeps ≤ 3 rows per item per partition with no
+    // sort (TopK).
     val sim = pp
       .join(ni.select(col("i").as("x"), col("n").as("nx")), Seq("x"))
       .join(ni.select(col("i").as("y"), col("n").as("ny")), Seq("y"))
@@ -498,13 +479,12 @@ object RecommenderQueries {
           col("ny").as("na"), col("nx").as("nb")))).as("s"))
       .select(col("s.i").as("i"), col("s.j").as("j"), col("s.c").as("c"),
         expr("(1000000 * s.c * s.c) div (s.na * s.nb)").as("sim2_ppm"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("i")).orderBy(col("sim2_ppm").desc, col("j"))
-    sim.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("i").as("item"), col("rn").cast("long").as("rank"),
-        col("j").as("neighbor"), col("c").as("common_users"),
-        col("sim2_ppm"))
+    graft.functions.TopK.perGroup(sim, Seq(col("i")), col("sim2_ppm"),
+        col("j"), 3, payload = Seq("c"))
+      .select(col("i").as("item"), col("rnk").as("rank"),
+        col("id").cast(sim.schema("j").dataType).as("neighbor"),
+        col("c").as("common_users"),
+        col("ord").cast(sim.schema("sim2_ppm").dataType).as("sim2_ppm"))
       .orderBy(col("item"), col("rank"))
   }
 
@@ -523,8 +503,10 @@ object RecommenderQueries {
     *
     * Scale: rides [[graft.ml.Recommender.coOccurrence]]'s cost-based
     * basket cap (the q36/q37 contract — pair expansion bounded by the
-    * size histogram); item counts and the basket total are keyed aggs;
-    * N joins in as a one-row broadcast frame. c·N·10⁶ ≤ 2⁶³ holds
+    * size histogram); item counts are a keyed agg, and the basket
+    * total N is a literal read from the items pin's key census (the
+    * pin's own job counts the distinct non-null baskets, so there is
+    * no one-row total frame to join). c·N·10⁶ ≤ 2⁶³ holds
     * through ~10⁹ baskets × 10³ pair support — the overflow margin at
     * 100 TB. */
   val q223 = QueryDef(
@@ -551,21 +533,15 @@ object RecommenderQueries {
       |FROM r ORDER BY lift_ppm DESC, antecedent, consequent
       |LIMIT 100""".stripMargin) { (s, d) =>
     val li = Tables.lineitem(s, d)
-    // ONE pinned distinct serves nb, ni AND the pair census (was
-    // three separate scan+distinct chains); nb/ni stay on the
-    // UNCAPPED frame — only the pair expansion rides the cost cap,
-    // exactly as before
-    val items = graft.functions.Checkpoints.pin(
-      org.apache.spark.sql.graft.PartitionedCheckpoint.byKeyWith(li
-        .select(col("l_orderkey").as("b"), col("l_partkey").as("i")),
-        Seq("b"))(_.dropDuplicates()))
-    val (cap, maxObs) = Recommender.capFromDistinct(items, "b")
-    val bounded = if (cap >= maxObs) items else items
-      .withColumn("__n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("b"))))
-      .filter(col("__n") <= cap)
-      .drop("__n")
-    val nb = items.agg(countDistinct(col("b")).as("n_baskets"))
+    // ONE pinned distinct serves ni AND the pair census, and its
+    // materializing job returns the basket-size histogram: the cap
+    // and the basket total N (non-null keys, COUNT(DISTINCT b)) come
+    // from it with no job of their own. ni and N stay on the UNCAPPED
+    // frame — only the pair expansion rides the cost cap.
+    val (items, census) = Recommender.basketPin(li
+      .select(col("l_orderkey").as("b"), col("l_partkey").as("i")), "b")
+    val bounded = Recommender.capToBudget(items, "b", census)
+    val nb = s"${census.nonNullKeys}L"
     val ni = items.groupBy(col("i")).agg(count(lit(1)).as("n"))
     val co = Recommender.pairCensus(bounded)
       .filter(col("n_baskets") >= 2)
@@ -573,13 +549,11 @@ object RecommenderQueries {
         col("n_baskets").as("n_both"))
     co.join(ni.select(col("i").as("a"), col("n").as("na")), Seq("a"))
       .join(ni.select(col("i").as("c"), col("n").as("nc")), Seq("c"))
-      .crossJoin(broadcast(nb))
       .select(col("a").as("antecedent"), col("c").as("consequent"),
         col("n_both"),
-        expr("(1000000 * n_both) div n_baskets").as("support_ppm"),
+        expr(s"(1000000 * n_both) div $nb").as("support_ppm"),
         expr("(1000000 * n_both) div na").as("confidence_ppm"),
-        expr("(1000000 * n_both * n_baskets) div (na * nc)")
-          .as("lift_ppm"))
+        expr(s"(1000000 * n_both * $nb) div (na * nc)").as("lift_ppm"))
       .orderBy(col("lift_ppm").desc, col("antecedent"),
         col("consequent"))
       .limit(100)

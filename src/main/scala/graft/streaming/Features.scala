@@ -549,8 +549,8 @@ object Features {
     * alongside the earlier one, exactly as batch top-k over both rows
     * would; a latest-score-per-id leaderboard needs max-per-id state
     * upstream of this buffer). `ord = Long.MinValue` is
-    * unrepresentable under the largest-first negation (same caveat as
-    * TopKAgg); real order keys never touch it. Changing `k` across a
+    * unrepresentable under the largest-first negation of the buffer
+    * key; real order keys never touch it. Changing `k` across a
     * checkpointed restart is handled: a deserialized buffer built
     * with a different k is re-keyed to the current k on its group's
     * next input batch (widening takes effect immediately; narrowing

@@ -234,7 +234,6 @@ class PlanSpec extends SparkSpec {
         "one-row calibration-count and q-hat frames (rank-exact)",
       "q218_triangle_census" -> "one-row graph census frames",
       "q222_kaplan_meier" -> "one-row study-end (max date) frame",
-      "q223_association_rules" -> "one-row basket-total frame",
       "q226_mmr_rerank" -> "broadcast query slice (vec_id < 10), the q32 contract",
       "q232_textrank_keywords" -> "one-row node-count frame (the q82 PageRank kernel)",
       "q236_isotonic_calibration" -> "ladder-bounded interval self-join (≤45² rows)",
@@ -516,13 +515,67 @@ class PlanSpec extends SparkSpec {
 
   test("top-k aggregate plans bounded buffers, not a window sort (q133)") {
     // the operator's reason to exist: no Window (no per-group full
-    // sort), the typed buffer rides ObjectHashAggregate with a partial
-    // (map-side) phase so the exchange carries <= k rows per group per
-    // partition
+    // sort); the fixed-width slot buffer rides HashAggregate with a
+    // partial (map-side) phase, so the exchange carries <= k rows per
+    // group per partition and nothing falls back to a sort
     val plan = CoreQueries.q133.run(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), plan)
-    assert(plan.contains("ObjectHashAggregate"), plan)
+    assert(plan.contains("HashAggregate"), plan)
+    assert(!plan.contains("ObjectHashAggregate"), plan)
+    assert(!plan.contains("SortAggregate"), plan)
+  }
+
+  test("item-CF and co-occurrence top-k plan no window and no sort-based " +
+    "aggregate (q219/q36)") {
+    Seq("q219_item_cf", "q36_co_occurrence").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, sf)
+        .queryExecution.executedPlan.toString
+      Seq("Window", "WindowGroupLimit", "SortAggregate",
+        "ObjectHashAggregate").foreach { op =>
+        assert(!plan.contains(op), s"$name plans $op:\n$plan")
+      }
+    }
+  }
+
+  test("q264's pair self-join reads the keyed items pin with no Exchange") {
+    // the pair self-join runs inside q264's pairs checkpoint, so its
+    // plan is the checkpoint job's, caught by a QueryExecutionListener
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f.toLowerCase.contains("checkpoint")) seen.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      CoreQueries.q264.run(spark, sf)
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    def strip(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => strip(a.executedPlan)
+      case q: QueryStageExec => strip(q.plan)
+      case other => other
+    }
+    // every path from a join down to an RDD scan (a pin) is
+    // exchange-free
+    def scanPaths(p: SparkPlan, exchanged: Boolean): Seq[Boolean] =
+      strip(p) match {
+        case _: RDDScanExec => Seq(exchanged)
+        case e: Exchange => e.children.flatMap(scanPaths(_, exchanged = true))
+        case o => o.children.flatMap(scanPaths(_, exchanged))
+      }
+    val pairJoins = seen.toArray(Array.empty[SparkPlan]).toSeq
+      .flatMap(p => strip(p).collect { case j: BaseJoinExec => j })
+      .filter(_.children.forall(c => scanPaths(c, false).nonEmpty))
+    assert(pairJoins.nonEmpty, seen.toArray.mkString("\n"))
+    pairJoins.foreach { j =>
+      assert(j.children.flatMap(scanPaths(_, false)).forall(!_), j.toString)
+    }
   }
 
   test("ORC cycle prunes partitions at the scan (q136)") {

@@ -5,9 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.functions.TopK
 import graft.functions.TopK.TopKBuf
 
-/** Bounded top-k aggregate: exact under any partitioning/merge tree,
-  * deterministic tie-breaks, bottom-k mode as the hash-priority
-  * reservoir, garbage-input tolerance. */
+/** Bounded top-k: the native hash aggregate equals the row_number
+  * reference under any partitioning (ties, nulls, small groups, empty
+  * and global inputs, payload columns), runs with no sort, bottom-k
+  * mode as the hash-priority reservoir, garbage-input tolerance; and
+  * the streaming buffer's algebra. */
 class TopKSpec extends SparkSpec {
 
   import spark.implicits._
@@ -60,24 +62,18 @@ class TopKSpec extends SparkSpec {
   }
 
   test("shuffle bytes measured: agg ≈ inferred-window-limit ≪ naive window") {
-    // The honest three-way measurement behind TopK's positioning
-    // (200k rows, 4 groups, 8 partitions; AQE off so the executed
-    // plans are plain trees with readable exchange metrics):
+    // The three-way measurement behind TopK's positioning (200k rows,
+    // 4 groups, 8 partitions; AQE off so the executed plans are plain
+    // trees with readable exchange metrics):
     //  - naive window (InferWindowGroupLimit excluded): EVERY row
-    //    crosses the group exchange — the shape both bounded forms
-    //    exist to avoid;
-    //  - Spark 4's own InferWindowGroupLimit: the adjacent
-    //    `filter(rnk <= k)` is pushed into a map-side
-    //    WindowGroupLimitExec, bounding the exchange to k rows per
-    //    group per partition — the optimizer already covers the
-    //    CLASSIC idiom (this test originally claimed otherwise and
-    //    the measurement corrected it);
-    //  - the TopK aggregate: same bounded exchange (compact
-    //    hand-serialized buffers — default Java serialization was
-    //    measured at 1.5 KB per k=3 buffer, 15x the payload), same
-    //    magnitude as the inferred form, and it additionally runs
-    //    where the window rewrite cannot: under streaming update
-    //    mode and composed with sibling aggregates in ONE pass.
+    //    crosses the group exchange;
+    //  - Spark 4's InferWindowGroupLimit: the adjacent
+    //    `filter(rnk <= k)` becomes a map-side WindowGroupLimit, so
+    //    the exchange carries k rows per group per partition — but
+    //    both sides of it still SORT every row by (group, order);
+    //  - the TopK hash aggregate: the same bounded exchange (k
+    //    fixed-width slots per group per partition) and no sort at
+    //    all, which is what it exists for.
     val aqe = "spark.sql.adaptive.enabled"
     val excl = "spark.sql.optimizer.excludedRules"
     val prevAqe = spark.conf.get(aqe)
@@ -91,22 +87,20 @@ class TopKSpec extends SparkSpec {
       // the materialized shuffle is REUSED, so a second collect reads
       // dataSize=0 — measure and take rows from the same (first) run
       def runOnce(df: org.apache.spark.sql.DataFrame)
-          : (Long, Seq[(String, Long, Long, Long)]) = {
+          : (Long, Seq[(String, Long, Long, Long)], String) = {
         import org.apache.spark.sql.execution.SparkPlan
-        import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
         import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
         val rows = df.collect().map(r => (r.getString(0), r.getLong(1),
           r.getLong(2), r.getLong(3))).sorted.toSeq
         def walk(p: SparkPlan): Long = p match {
-          case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-          case q: QueryStageExec => walk(q.plan)
           case s: ShuffleExchangeExec =>
             s.metrics("dataSize").value + s.children.map(walk).sum
           case other => other.children.map(walk).sum
         }
-        val got = walk(df.queryExecution.executedPlan)
+        val plan = df.queryExecution.executedPlan
+        val got = walk(plan)
         assert(got > 0, "no shuffle metrics found — traversal broken?")
-        (got, rows)
+        (got, rows, plan.toString)
       }
       def winForm = {
         val w = org.apache.spark.sql.expressions.Window
@@ -114,23 +108,84 @@ class TopKSpec extends SparkSpec {
         base.withColumn("rnk", row_number().over(w).cast("long"))
           .filter(col("rnk") <= 3).select("g", "rnk", "id", "v")
       }
-      val (a, rowsA) = runOnce(TopK.perGroup(base, Seq(col("g")),
+      val (a, rowsA, planA) = runOnce(TopK.perGroup(base, Seq(col("g")),
         col("v"), col("id"), 3))
-      val (b, rowsB) = runOnce(winForm)
+      val (b, rowsB, planB) = runOnce(winForm)
       spark.conf.set(excl,
         "org.apache.spark.sql.catalyst.optimizer.InferWindowGroupLimit")
-      val (c, rowsC) = runOnce(winForm)
+      val (c, rowsC, _) = runOnce(winForm)
       assert(rowsA == rowsB && rowsB == rowsC) // identical answers
       info(f"agg=$a%d B, inferred-window=$b%d B, naive-window=$c%d B " +
         f"(naive/agg = ${c.toDouble / a}%.0fx)")
       assert(a < c / 100, s"agg $a not ≪ naive $c")
       assert(b < c / 100, s"inferred $b not ≪ naive $c")
       assert(a < 4 * b, s"agg $a not within 4x of inferred $b")
+      // the aggregate is sort-free; the inferred window is not
+      assert(planA.contains("HashAggregate"), planA)
+      Seq("Sort", "ObjectHashAggregate", "SortAggregate", "Window")
+        .foreach(op => assert(!planA.contains(op), planA))
+      assert(planB.contains("Sort") && planB.contains("WindowGroupLimit"),
+        planB)
     } finally {
       spark.conf.set(aqe, prevAqe)
       prevExcl match {
         case Some(v) => spark.conf.set(excl, v)
         case None => spark.conf.unset(excl)
+      }
+    }
+  }
+
+  test("native top-k equals the row_number reference (ties, nulls, " +
+    "small groups, empty, global; payload rides its own row)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    type Out = (Option[Int], Long, Long, Long, Long, Option[Double])
+    def rows(df: DataFrame): Seq[Out] = df.collect().map(r => (
+      Option(r.get(0)).map(_.asInstanceOf[Int]), r.getLong(1), r.getLong(2),
+      r.getLong(3), r.getLong(4), Option(r.get(5)).map(_.asInstanceOf[Double])))
+      .toSeq.sortBy(t => (t._1.getOrElse(Int.MinValue), t._2))
+    // (g, ord, id, p, q): ord drawn from a small range (ties), ~10% null
+    // ord and ~5% null id; ids unique; p a payload unique per row and
+    // q a nullable double payload
+    def frame(seed: Int, n: Int, groups: Int): DataFrame = {
+      val rnd = new scala.util.Random(seed)
+      spark.createDataFrame((0 until n).map { i =>
+        (if (rnd.nextInt(20) == 0) None else Some(rnd.nextInt(groups)),
+          if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(7).toLong - 3),
+          if (rnd.nextInt(20) == 0) None else Some(i.toLong),
+          i * 1000L + seed,
+          if (rnd.nextInt(4) == 0) None else Some(rnd.nextDouble()))
+      }).toDF("g", "ord", "id", "p", "q")
+    }
+    def reference(df: DataFrame, grouped: Boolean, k: Int,
+                  largest: Boolean): DataFrame = {
+      val o = if (largest) col("ord").desc else col("ord").asc
+      val w = if (grouped) Window.partitionBy(col("g")).orderBy(o, col("id"))
+        else Window.orderBy(o, col("id"))
+      df.filter(col("ord").isNotNull && col("id").isNotNull)
+        .withColumn("rnk", row_number().over(w).cast("long"))
+        .filter(col("rnk") <= k)
+        .select(if (grouped) col("g") else lit(null).cast("int").as("g"),
+          col("rnk"), col("id"), col("ord"), col("p"), col("q"))
+    }
+    def native(df: DataFrame, grouped: Boolean, k: Int,
+               largest: Boolean): DataFrame =
+      TopK.perGroup(df, if (grouped) Seq(col("g")) else Nil, col("ord"),
+          col("id"), k, largest, payload = Seq("p", "q"))
+        .select(if (grouped) col("g") else lit(null).cast("int").as("g"),
+          col("rnk"), col("id"), col("ord"), col("p"), col("q"))
+    val cases = Seq(
+      ("ties + nulls", frame(1, 400, 5), true, 4),
+      ("groups smaller than k", frame(2, 120, 50), true, 5),
+      ("k = 1", frame(3, 300, 7), true, 1),
+      ("empty", frame(4, 50, 3).limit(0), true, 3),
+      ("global", frame(5, 300, 4), false, 6),
+      ("global empty", frame(6, 10, 2).limit(0), false, 2))
+    for ((label, df, grouped, k) <- cases; largest <- Seq(true, false)) {
+      val want = rows(reference(df, grouped, k, largest))
+      Seq(1, 11).foreach { parts =>
+        val got = rows(native(df.repartition(parts), grouped, k, largest))
+        assert(got == want, s"$label, largest=$largest, $parts partitions")
       }
     }
   }
